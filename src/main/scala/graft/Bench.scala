@@ -6,7 +6,8 @@ package graft
   * timings on a cold JVM mostly measure classloading, which a long-lived
   * cluster never pays per query. Queries execute their FULL physical plan
   * (Sessions.runFully) — a count() would let the optimizer prune the
-  * projections and sorts under test. Failed queries report -1.
+  * projections and sorts under test. Failed queries report -1 and print
+  * `[bench] <query> failed: <class>: <message line>` on stderr.
   *
   * Interference evidence (round-7 ask #4): the sweep runs on a shared
   * host whose episodic contention inflated different queries on
@@ -35,15 +36,21 @@ object Bench {
     // RDD blocks (withScratch / CC iterations), whose lazy reclamation
     // distorted BENCH_r04 — the timed pass must never reuse warmup state
     // nor inherit block-manager churn from earlier queries.
-    ordered.foreach { case (_, fn) =>
-      try Sessions.runFully(fn(spark, sfDir)) catch { case _: Throwable => () }
+    // a failure is reported on stderr (stdout carries only the two JSON
+    // lines) and the run goes on; a failed timed pass records -1
+    def failed(name: String, e: Throwable): Unit = System.err.println(
+      s"[bench] $name failed: ${e.getClass.getName}: " +
+        Option(e.getMessage).flatMap(_.linesIterator.nextOption()).getOrElse(""))
+    ordered.foreach { case (name, fn) =>
+      try Sessions.runFully(fn(spark, sfDir))
+      catch { case e: Throwable => failed(name, e) }
       Sessions.releaseAll(spark)
     }
-    def timeOnce(fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+    def timeOnce(name: String, fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()
       val ok =
         try { Sessions.runFully(fn(spark, sfDir)); true }
-        catch { case _: Throwable => false }
+        catch { case e: Throwable => failed(name, e); false }
       val dt = (System.nanoTime() - t0) / 1e9
       Sessions.releaseAll(spark)
       if (ok) dt else -1.0
@@ -56,11 +63,11 @@ object Bench {
     // name -> (first, Option(retry)); best = min of the two feeds the total
     val results: Seq[(String, Double, Option[Double])] =
       ordered.map { case (name, fn) =>
-        val t = timeOnce(fn)
+        val t = timeOnce(name, fn)
         val med = trailingMedian
         val spiked = t >= 0 && done.count(_ >= 0) >= 5 &&
           t > 1.5 && t > 3.0 * med
-        val retry = if (spiked) Some(timeOnce(fn)) else None
+        val retry = if (spiked) Some(timeOnce(name, fn)) else None
         val best = retry.filter(_ >= 0).map(math.min(t, _)).getOrElse(t)
         done += best
         (name, t, retry)

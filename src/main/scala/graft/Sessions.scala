@@ -2,8 +2,12 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.plans.GraftExtensions
+
 /** Shared session construction + full-plan execution for the harness
-  * mains (Verify / Bench / Probe) — one place for local-mode config. */
+  * mains (Verify / Bench / Probe) — one place for local-mode config, and
+  * the one place graft's rules and functions enter a session
+  * ([[GraftExtensions]]). */
 object Sessions {
   def local(cpus: String): SparkSession = {
     val spark = SparkSession.builder()
@@ -16,15 +20,9 @@ object Sessions {
       // one core). 8 MB splits the probe files across the pool; a real
       // cluster keeps the default (its inputs arrive as many files).
       .config("spark.sql.files.maxPartitionBytes", s"${8 * 1024 * 1024}")
-      // AQE partition-coalescing policy, env-parameterised for A/Bs
-      // (default = Spark's default, which favors parallelism; false
-      // sizes reducers purely by advisory bytes — the documented
-      // production setting for large clusters, but it serializes the
-      // compute-heavy byte-small reducers this suite is full of).
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "true"))
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .withExtensions(new GraftExtensions)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

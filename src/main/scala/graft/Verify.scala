@@ -37,7 +37,9 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     if (sqlOnly) { spark.stop(); return }
-    selected(SparkEntry.queries).foreach { case (name, fn) =>
+    // sorted, as Bench runs them: an order-dependent fault then shows in
+    // both mains
+    selected(SparkEntry.queries).toSeq.sortBy(_._1).foreach { case (name, fn) =>
       // drop any stale output first: if this run's query throws, a
       // previous run's parquet must not be compared as green
       val target = new java.io.File(s"$outDir/$name")
@@ -48,10 +50,18 @@ object Verify {
         }
         rm(target)
       }
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+      // dump the rows of the builder's own QueryExecution, as Bench runs
+      // it: q151/q166/q177 pin their rewritten plans and then clear the
+      // declaration, and a `write` of the frame would plan it afresh
+      // without the rewrite, leaving the rewritten answer unchecked
+      try {
+        val df = fn(spark, sfDir)
+        org.apache.spark.sql.graft.bridge
+          .internalCreateDataFrame(spark, df.queryExecution.toRdd, df.schema)
+          .coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+      } catch { case e: Throwable =>
+        System.err.println(
+          s"[verify] $name failed: ${e.getClass.getName}: ${e.getMessage}")
       }
       // builders release their own scratch caches (Dedup.withScratch);
       // this guards against future builders that persist without it

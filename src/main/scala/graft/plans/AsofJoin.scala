@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute,
   BindReferences, Expression, GenericInternalRow, JoinedRow, SortOrder,
@@ -58,8 +58,9 @@ object AsofJoin {
     * [[graft.operators.TemporalJoins.nearest]] rule, pandas
     * merge_asof's direction surface). `toleranceUs` bounds the match
     * distance inclusively when set (right `ts` must be LONG-backed
-    * micros for the comparison). Installs [[AsofStrategy]] into the
-    * session on first use (also ships in [[GraftExtensions]]). */
+    * micros for the comparison). [[AsofStrategy]] plans the node; it is
+    * installed with [[GraftExtensions]] — a session that graft does not
+    * build gets graft with `spark.sql.extensions=graft.plans.GraftExtensions`. */
   def join(left: DataFrame, right: DataFrame, key: String, ts: String,
       rightPayload: Seq[String], direction: String = "backward",
       toleranceUs: Option[Long] = None): DataFrame = {
@@ -67,13 +68,6 @@ object AsofJoin {
       s"graft AsofJoin: unknown direction '$direction'")
     require(toleranceUs.forall(_ >= 0), "negative tolerance")
     import org.apache.spark.sql.functions.col
-    val spark = left.sparkSession
-    if (!spark.experimental.extraStrategies.contains(AsofStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ AsofStrategy
-    if (!spark.experimental.extraOptimizations.contains(AsofPrune))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ AsofPrune
     // self-join hazard: if both frames derive from one scan, their
     // attributes share exprIds, and an optimizer rule seeing the left
     // side already "provide" user_id#N prunes it off the right child
@@ -87,7 +81,7 @@ object AsofJoin {
     def attr(p: LogicalPlan, n: String): Attribute =
       p.output.find(_.name == n).getOrElse(throw new IllegalArgumentException(
         s"graft AsofJoin: no column '$n' in ${p.output.map(_.name)}"))
-    org.apache.spark.sql.graft.bridge.ofRows(spark,
+    org.apache.spark.sql.graft.bridge.ofRows(left.sparkSession,
         AsofJoinPlan(l, r, attr(l, key), attr(r, key + sfx),
           attr(l, ts), attr(r, ts + sfx),
           rightPayload.map(p => attr(r, p + sfx)),

@@ -60,8 +60,9 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * strictly shrinks a child's output or moves a conjunct that then no
   * longer matches.
   *
-  * Installed alongside the strategies by [[AsofJoin.join]] /
-  * [[OverlapJoin.join]] and by [[GraftExtensions]].
+  * Install: [[GraftExtensions]], with the two strategies; a session
+  * that graft does not build gets graft with
+  * `spark.sql.extensions=graft.plans.GraftExtensions`.
   */
 object AsofPrune extends Rule[LogicalPlan] {
 

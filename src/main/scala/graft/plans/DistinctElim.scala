@@ -2,7 +2,6 @@ package graft.plans
 
 import java.util.concurrent.ConcurrentHashMap
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference,
   NamedExpression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression,
@@ -64,6 +63,11 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * child's own attributes, and each `first(attr) AS name` becomes
   * `attr AS name` under the ORIGINAL alias exprId, so parents resolve
   * untouched (the SummaryRewrite move).
+  *
+  * Install: [[GraftExtensions]]; a session that graft does not build
+  * gets graft with `spark.sql.extensions=graft.plans.GraftExtensions`.
+  * The rule is a no-op until [[declare]]; q177 clears its key once its
+  * plan is optimized.
   */
 object DistinctElim extends Rule[LogicalPlan] with PredicateHelper {
 
@@ -72,12 +76,8 @@ object DistinctElim extends Rule[LogicalPlan] with PredicateHelper {
   private val keys = ConcurrentHashMap.newKeySet[Key]()
 
   /** Declare `path.column` unique (the caller's audited assertion). */
-  def declare(spark: SparkSession, path: String, column: String): Unit = {
+  def declare(path: String, column: String): Unit =
     keys.add(Key(SummaryRewrite.normalize(path), column))
-    if (!spark.experimental.extraOptimizations.contains(this))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ this
-  }
 
   /** Drop every declaration (the rule stays installed as a no-op). */
   def clear(): Unit = keys.clear()

@@ -90,9 +90,4 @@ object DotProduct {
     org.apache.spark.sql.graft.bridge.column(DotProduct(
       org.apache.spark.sql.graft.bridge.expression(a),
       org.apache.spark.sql.graft.bridge.expression(b)))
-
-  /** Make `graft_dot(a, b)` callable from SQL text on this session. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    org.apache.spark.sql.graft.bridge.registerFunction(spark, "graft_dot",
-      args => DotProduct(args(0), args(1)))
 }

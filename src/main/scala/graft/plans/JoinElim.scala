@@ -2,7 +2,6 @@ package graft.plans
 
 import java.util.concurrent.ConcurrentHashMap
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference,
   EqualTo, Expression, IsNotNull, PredicateHelper}
 import org.apache.spark.sql.catalyst.plans.Inner
@@ -45,9 +44,11 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
   * the data violates would change answers; that is the declarer's
   * responsibility, as in every warehouse that ships RELY constraints.
   *
-  * Install: [[declare]] self-installs into
-  * `spark.experimental.extraOptimizations` (and ships in
-  * [[GraftExtensions]] for `withExtensions` sessions).
+  * Install: [[GraftExtensions]]; a session that graft does not build
+  * gets graft with `spark.sql.extensions=graft.plans.GraftExtensions`.
+  * The rule is a no-op until [[declare]]; a query that declares an
+  * edge clears it once its plan is optimized (q166), so no declaration
+  * outlives the query that made it.
   */
 object JoinElim extends Rule[LogicalPlan] with PredicateHelper {
 
@@ -60,14 +61,10 @@ object JoinElim extends Rule[LogicalPlan] with PredicateHelper {
 
   /** Declare `fact.fk → dim.pk` (pk unique; fk non-null and always
     * present in pk — the caller's audited assertion, see q122). */
-  def declare(spark: SparkSession, factPath: String, fk: String,
-      dimPath: String, pk: String): Unit = {
+  def declare(factPath: String, fk: String, dimPath: String,
+      pk: String): Unit =
     edges.add(Edge(SummaryRewrite.normalize(factPath), fk,
       SummaryRewrite.normalize(dimPath), pk))
-    if (!spark.experimental.extraOptimizations.contains(this))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ this
-  }
 
   /** Drop every declaration (the rule stays installed as a no-op). */
   def clear(): Unit = edges.clear()

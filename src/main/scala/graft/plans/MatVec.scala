@@ -110,9 +110,4 @@ object MatVec {
     org.apache.spark.sql.graft.bridge.column(MatVec(
       org.apache.spark.sql.graft.bridge.expression(m),
       org.apache.spark.sql.graft.bridge.expression(v)))
-
-  /** Make `graft_matvec(m, v)` callable from SQL text on this session. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    org.apache.spark.sql.graft.bridge.registerFunction(spark, "graft_matvec",
-      args => MatVec(args(0), args(1)))
 }

@@ -91,10 +91,4 @@ object MinHashSig {
   def apply(c: Column, k: Int): Column =
     org.apache.spark.sql.graft.bridge.column(MinHashSig(
       org.apache.spark.sql.graft.bridge.expression(c), k))
-
-  /** Make `graft_minhash(sh, k)` callable from SQL text on this session. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    org.apache.spark.sql.graft.bridge.registerFunction(spark, "graft_minhash",
-      args => MinHashSig(args(0),
-        args(1).eval().asInstanceOf[Int]))
 }

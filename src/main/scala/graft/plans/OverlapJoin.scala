@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute,
   BindReferences, Expression, JoinedRow, SortOrder, UnsafeProjection,
@@ -52,19 +52,13 @@ import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan,
 object OverlapJoin {
 
   /** Declarative surface: left's columns plus `rightPayload` for every
-    * overlapping same-key pair. Installs [[OverlapStrategy]] on first
-    * use (also ships in [[GraftExtensions]]). */
+    * overlapping same-key pair. [[OverlapStrategy]] plans the node; it
+    * is installed with [[GraftExtensions]] — a session that graft does
+    * not build gets graft with `spark.sql.extensions=graft.plans.GraftExtensions`. */
   def join(left: DataFrame, right: DataFrame, key: String,
       lStart: String, lEnd: String, rStart: String, rEnd: String,
       rightPayload: Seq[String]): DataFrame = {
     import org.apache.spark.sql.functions.col
-    val spark = left.sparkSession
-    if (!spark.experimental.extraStrategies.contains(OverlapStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ OverlapStrategy
-    if (!spark.experimental.extraOptimizations.contains(AsofPrune))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ AsofPrune
     // the AsofJoin self-join hazard: shared exprIds between children let
     // the optimizer prune "already provided" attributes off the right
     // child — re-alias the right side under reserved names
@@ -75,7 +69,7 @@ object OverlapJoin {
     def attr(p: LogicalPlan, n: String): Attribute =
       p.output.find(_.name == n).getOrElse(throw new IllegalArgumentException(
         s"graft OverlapJoin: no column '$n' in ${p.output.map(_.name)}"))
-    org.apache.spark.sql.graft.bridge.ofRows(spark,
+    org.apache.spark.sql.graft.bridge.ofRows(left.sparkSession,
         OverlapJoinPlan(l, r, attr(l, key), attr(r, key + sfx),
           attr(l, lStart), attr(l, lEnd),
           attr(r, rStart + sfx), attr(r, rEnd + sfx),

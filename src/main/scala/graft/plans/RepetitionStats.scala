@@ -98,14 +98,4 @@ object RepetitionStats {
   def apply(c: Column, k: Int): Column =
     org.apache.spark.sql.graft.bridge.column(RepetitionStats(
       org.apache.spark.sql.graft.bridge.expression(c), k))
-
-  /** Temp-function registration for sessions built without
-    * [[GraftExtensions]]. k must be an integer literal. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    org.apache.spark.sql.graft.bridge.registerFunction(spark, "graft_repstats",
-      args => RepetitionStats(args(0), args(1).eval() match {
-        case i: Int => i
-        case other => throw new IllegalArgumentException(
-          s"graft_repstats k must be an integer literal, got $other")
-      }))
 }

@@ -119,9 +119,4 @@ object RollingHash {
   def apply(c: Column): Column =
     org.apache.spark.sql.graft.bridge.column(RollingHash(
       org.apache.spark.sql.graft.bridge.expression(c)))
-
-  /** Make `graft_rollhash(s)` callable from SQL text on this session. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    org.apache.spark.sql.graft.bridge.registerFunction(spark, "graft_rollhash",
-      args => RollingHash(args(0)))
 }

@@ -2,7 +2,7 @@ package graft.plans
 
 import java.util.concurrent.ConcurrentHashMap
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference,
   Literal, NamedExpression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression,
@@ -43,10 +43,11 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
   * the summary subtree is instantiated with FRESH attribute ids per
   * rewrite site, so two rewritten aggregates in one plan cannot collide.
   *
-  * Install: `SummaryRewrite.register(spark, factPath, summaryDf, keys,
-  * partials)` — the rule self-installs into
-  * `spark.experimental.extraOptimizations` (it also ships in
-  * [[GraftExtensions]] for `withExtensions` sessions). The summary
+  * Install: [[GraftExtensions]]; a session that graft does not build
+  * gets graft with `spark.sql.extensions=graft.plans.GraftExtensions`.
+  * The rule is a no-op until `SummaryRewrite.register(factPath,
+  * summaryDf, keys, partials)`; q151 clears its registration once its
+  * plan is optimized. The summary
   * should be a MATERIALIZED table (its optimized plan is captured at
   * registration); registering the fact-derived query frame directly
   * would re-aggregate the fact and defeat the point.
@@ -64,17 +65,14 @@ object SummaryRewrite extends Rule[LogicalPlan] {
   /** Register `summary` as the rollup of the parquet fact at
     * `factPath`, keyed by `keys`. Fails loud if the summary schema is
     * missing a key or partial column. */
-  def register(spark: SparkSession, factPath: String, summary: DataFrame,
-      keys: Seq[String], partials: Map[(String, String), String]): Unit = {
+  def register(factPath: String, summary: DataFrame, keys: Seq[String],
+      partials: Map[(String, String), String]): Unit = {
     val cols = summary.schema.fieldNames.toSet
     val missing = (keys ++ partials.values).filterNot(cols)
     require(missing.isEmpty,
       s"graft SummaryRewrite: summary lacks columns ${missing.mkString(",")}")
     regs.put(normalize(factPath),
       Reg(summary.queryExecution.optimizedPlan, keys.toSet, partials))
-    if (!spark.experimental.extraOptimizations.contains(this))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ this
   }
 
   /** Drop every registration (the rule stays installed as a no-op). */

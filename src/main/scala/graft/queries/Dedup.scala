@@ -1541,7 +1541,7 @@ object Dedup {
     // returns exactly the unfiltered join's answer; false positives
     // only cost a few extra probe rows. Native
     // BloomFilterAggregate/MightContain (codegen'd, internal to Spark's
-    // runtime row-filtering) exposed via [[graft.functions.Blooms]].
+    // runtime row-filtering) exposed via [[graft.plans.GraftExtensions]].
     QuerySpec.sqlBacked("q72_decontaminate_bloom",
       """WITH w AS (
         |  SELECT doc_id, string_split(text, ' ') AS ws,
@@ -1558,7 +1558,6 @@ object Dedup {
         |SELECT tr.doc_id AS train_id, count(*) AS n_shared
         |FROM tr JOIN te USING (g)
         |GROUP BY train_id ORDER BY train_id""".stripMargin) { (s, dir) =>
-      graft.functions.Blooms.register(s)
       // NO shared gram cache here, unlike q63: its two branches feed one
       // job, where the persist pays for itself; q72's te side must
       // materialize FIRST (the scalar subquery runs before the main

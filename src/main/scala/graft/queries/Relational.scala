@@ -1124,8 +1124,7 @@ object Relational {
           min(col("l_extendedprice")).as("mn"),
           max(col("l_extendedprice")).as("mx"))
         .write.mode("overwrite").parquet(sumPath)
-      graft.plans.SummaryRewrite.register(s, factPath,
-        s.read.parquet(sumPath),
+      graft.plans.SummaryRewrite.register(factPath, s.read.parquet(sumPath),
         keys = Seq("l_returnflag", "l_linestatus"),
         partials = Map(
           ("sum", "l_quantity") -> "s_qty",
@@ -1260,20 +1259,24 @@ object Relational {
         |  CAST(sum(CAST(floor(l_quantity) AS BIGINT)) AS BIGINT) AS qty
         |FROM lineitem JOIN part ON l_partkey = p_partkey
         |GROUP BY band ORDER BY band""".stripMargin) { (s, dir) =>
-      graft.plans.JoinElim.declare(s, s"$dir/lineitem.parquet",
-        "l_partkey", s"$dir/part.parquet", "p_partkey")
-      val li = Tables(s, dir, "lineitem")
-        .select(col("l_partkey"), col("l_quantity"))
-      val pt = Tables(s, dir, "part").select(col("p_partkey"))
-      val df = li.join(pt, col("l_partkey") === col("p_partkey"))
-        .groupBy((col("p_partkey") % 97).as("band"))
-        .agg(count(lit(1)).as("n_lines"),
-          sum(floor(col("l_quantity")).cast("long")).as("qty"))
-        .transform(d => Tables.orderedByBound(d, 97)(col("band"))) // bounded sort (§2)
-      val scans = graft.plans.SummaryRewrite.scannedPaths(df)
-      require(!scans.exists(_.endsWith("part.parquet")),
-        s"q166: the dimension join was not eliminated (scans: $scans)")
-      df
+      graft.plans.JoinElim.declare(s"$dir/lineitem.parquet", "l_partkey",
+        s"$dir/part.parquet", "p_partkey")
+      try {
+        val li = Tables(s, dir, "lineitem")
+          .select(col("l_partkey"), col("l_quantity"))
+        val pt = Tables(s, dir, "part").select(col("p_partkey"))
+        val df = li.join(pt, col("l_partkey") === col("p_partkey"))
+          .groupBy((col("p_partkey") % 97).as("band"))
+          .agg(count(lit(1)).as("n_lines"),
+            sum(floor(col("l_quantity")).cast("long")).as("qty"))
+          .transform(d => Tables.orderedByBound(d, 97)(col("band"))) // bounded sort (§2)
+        // forcing optimizedPlan pins the eliminated plan in this frame's
+        // queryExecution, so the edge can be cleared before it runs
+        val scans = graft.plans.SummaryRewrite.scannedPaths(df)
+        require(!scans.exists(_.endsWith("part.parquet")),
+          s"q166: the dimension join was not eliminated (scans: $scans)")
+        df
+      } finally graft.plans.JoinElim.clear()
     },
 
     // ------------------------------------------------------------------
@@ -1318,18 +1321,21 @@ object Relational {
     QuerySpec.sqlBacked("q177_distinct_elim",
       """SELECT DISTINCT o_orderkey, o_custkey, o_orderstatus
         |FROM orders ORDER BY o_orderkey""".stripMargin) { (s, dir) =>
-      graft.plans.DistinctElim.declare(s, s"$dir/orders.parquet",
-        "o_orderkey")
-      val df = Tables(s, dir, "orders")
-        .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"))
-        .distinct()
-        .transform(Tables.tableOrdered(s, dir, "orders")(col("o_orderkey"))) // bounded sort (§2)
-      val aggs = df.queryExecution.optimizedPlan.collect {
-        case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate => a
-      }
-      require(aggs.isEmpty,
-        s"q177: the distinct was not eliminated (${aggs.size} Aggregate)")
-      df
+      graft.plans.DistinctElim.declare(s"$dir/orders.parquet", "o_orderkey")
+      try {
+        val df = Tables(s, dir, "orders")
+          .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"))
+          .distinct()
+          .transform(Tables.tableOrdered(s, dir, "orders")(col("o_orderkey"))) // bounded sort (§2)
+        // the require forces optimizedPlan, pinning the eliminated plan
+        // in this frame's queryExecution before the key is cleared
+        val aggs = df.queryExecution.optimizedPlan.collect {
+          case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate => a
+        }
+        require(aggs.isEmpty,
+          s"q177: the distinct was not eliminated (${aggs.size} Aggregate)")
+        df
+      } finally graft.plans.DistinctElim.clear()
     }
   )
 

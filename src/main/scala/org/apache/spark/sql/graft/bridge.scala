@@ -45,13 +45,4 @@ object bridge {
       : org.apache.spark.sql.DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
-
-  /** Register an expression builder as a SQL temp function on a session
-    * (FunctionRegistry is private[sql]); lets `spark.sql` text call
-    * native graft expressions like `graft_dot`. */
-  def registerFunction(spark: org.apache.spark.sql.SparkSession, name: String,
-      builder: Seq[Expression] => Expression): Unit =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-      .createOrReplaceTempFunction(name, builder, "scala_udf")
 }

@@ -49,6 +49,8 @@ object SparkSpec {
       // static conf; needed by specs that saveAsTable (bucketing)
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft_warehouse").toString)
+      // graft's rules and functions, installed as in Sessions.local
+      .withExtensions(new graft.plans.GraftExtensions)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -2,15 +2,16 @@ package graft.functions
 
 import graft.SparkSpec
 
-/** Contract checks for the [[Blooms]] SQL surface: no false negatives
-  * (the property the q72 prefilter->confirm pattern's exactness rests
-  * on), plausible selectivity, and argument validation. */
+/** Contract checks for the bloom SQL surface (`graft_bloom_agg` /
+  * `graft_bloom_contains`, injected by [[graft.plans.GraftExtensions]]):
+  * no false negatives (the property the q72 prefilter->confirm
+  * pattern's exactness rests on), plausible selectivity, and argument
+  * validation. */
 class BloomsSpec extends SparkSpec {
   import spark.implicits._
 
   override def beforeAll(): Unit = {
     super.beforeAll()
-    Blooms.register(spark)
     val rnd = new scala.util.Random(23)
     // small side: 400 members; big side: members + 20k non-members
     val members = List.tabulate(400)(i => s"m-$i-${rnd.nextInt(1 << 20)}")

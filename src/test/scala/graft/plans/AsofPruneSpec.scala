@@ -33,6 +33,17 @@ class AsofPruneSpec extends SparkSpec {
     d
   }
 
+  /** Run `body` with [[AsofPrune]] excluded from the optimizer: the
+    * rule-off side of every differential below. A frame is planned once,
+    * so each side must build its own (`def`, not `val`). */
+  private def withoutPrune[T](body: => T): T = {
+    val key = "spark.sql.optimizer.excludedRules"
+    val before = spark.conf.getOption(key)
+    spark.conf.set(key, AsofPrune.ruleName)
+    try body
+    finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   private def query = AsofJoin.join(
       spark.read.parquet(s"$dir/left"), spark.read.parquet(s"$dir/right"),
       "k", "t", Seq("rid", "r_unused"))
@@ -56,14 +67,13 @@ class AsofPruneSpec extends SparkSpec {
       df.collect().map(r => r.getInt(0) ->
         (if (r.isNullAt(1)) None else Some(r.getInt(1)))).toMap
     val pruned = collectPairs(query)
-    val before = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations =
-      before.filterNot(_ == AsofPrune)
-    try {
-      val bare = collectPairs(query)
-      assert(pruned == bare)
-      assert(pruned.nonEmpty && pruned.values.exists(_.isDefined))
-    } finally spark.experimental.extraOptimizations = before
+    val bare = withoutPrune(collectPairs(query))
+    assert(pruned == bare)
+    // the rule really was off on the bare side: the right scan kept the
+    // unused payload column
+    assert(withoutPrune(query.queryExecution.executedPlan.toString)
+      .contains("r_unused"))
+    assert(pruned.nonEmpty && pruned.values.exists(_.isDefined))
   }
 
   test("payload-referencing and non-deterministic conjuncts stay above") {
@@ -89,7 +99,7 @@ class AsofPruneSpec extends SparkSpec {
   }
 
   test("key-only conjuncts mirror to the ASOF right side (both scans filter)") {
-    val df = AsofJoin.join(
+    def df = AsofJoin.join(
         spark.read.parquet(s"$dir/left"), spark.read.parquet(s"$dir/right"),
         "k", "t", Seq("rid"))
       .filter(col("k") < 5 && col("lid") < 1300)
@@ -103,16 +113,12 @@ class AsofPruneSpec extends SparkSpec {
     assert(physical.contains("AsofJoin"), physical)
     // rule-off differential: mirroring must not change the answer
     val withRule = df.collect().map(_.toSeq).toSet
-    val before = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = before.filterNot(_ == AsofPrune)
-    try {
-      assert(df.collect().map(_.toSeq).toSet == withRule)
-      assert(withRule.nonEmpty)
-    } finally spark.experimental.extraOptimizations = before
+    assert(withoutPrune(df.collect()).map(_.toSeq).toSet == withRule)
+    assert(withRule.nonEmpty)
   }
 
   test("overlap node: key-only conjuncts reach the OPPOSITE side's scan") {
-    val df = OverlapJoin.join(
+    def df = OverlapJoin.join(
         spark.read.parquet(s"$dir/left")
           .selectExpr("k", "cast(lid as long) as s0",
             "cast(lid as long) + 50 as e0", "lid"),
@@ -128,16 +134,12 @@ class AsofPruneSpec extends SparkSpec {
     assert("Not\\(EqualTo\\(k,2\\)\\)".r.findAllIn(physical).size >= 2,
       s"key predicate not mirrored across the overlap join:\n$physical")
     val withRule = df.collect().map(_.toSeq).toSet
-    val before = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = before.filterNot(_ == AsofPrune)
-    try {
-      assert(df.collect().map(_.toSeq).toSet == withRule)
-      assert(withRule.nonEmpty)
-    } finally spark.experimental.extraOptimizations = before
+    assert(withoutPrune(df.collect()).map(_.toSeq).toSet == withRule)
+    assert(withRule.nonEmpty)
   }
 
   test("overlap node: both-side pushdown and pruning reach the scans") {
-    val df = OverlapJoin.join(
+    def df = OverlapJoin.join(
         spark.read.parquet(s"$dir/left")
           .selectExpr("k", "cast(lid as long) as s0",
             "cast(lid as long) + 50 as e0", "lid", "l_unused"),
@@ -156,10 +158,7 @@ class AsofPruneSpec extends SparkSpec {
     assert(physical.contains("OverlapJoin"), physical)
     // and the same query with the rule off agrees row for row
     val withRule = df.collect().map(_.toSeq).toSet
-    val before = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = before.filterNot(_ == AsofPrune)
-    try assert(df.collect().map(_.toSeq).toSet == withRule)
-    finally spark.experimental.extraOptimizations = before
+    assert(withoutPrune(df.collect()).map(_.toSeq).toSet == withRule)
   }
 
   test("randomized differential: any filter/projection mix, rule == no rule") {
@@ -183,13 +182,9 @@ class AsofPruneSpec extends SparkSpec {
         .filter(pred).select(proj: _*)
       val withRule = q.collect().map(_.toSeq).toSeq
         .sortBy(_.mkString("|"))
-      val before = spark.experimental.extraOptimizations
-      spark.experimental.extraOptimizations =
-        before.filterNot(_ == AsofPrune)
-      try {
-        val bare = q.collect().map(_.toSeq).toSeq.sortBy(_.mkString("|"))
-        assert(withRule == bare, s"trial $trial: pred=$pred proj=$proj")
-      } finally spark.experimental.extraOptimizations = before
+      val bare = withoutPrune(q.collect()).map(_.toSeq).toSeq
+        .sortBy(_.mkString("|"))
+      assert(withRule == bare, s"trial $trial: pred=$pred proj=$proj")
     }
   }
 }

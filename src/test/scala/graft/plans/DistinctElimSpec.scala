@@ -20,7 +20,7 @@ class DistinctElimSpec extends SparkSpec {
   private def orders() = spark.read.parquet(s"$dir/orders.parquet")
 
   private def declare(): Unit =
-    DistinctElim.declare(spark, s"$dir/orders.parquet", "o_orderkey")
+    DistinctElim.declare(s"$dir/orders.parquet", "o_orderkey")
 
   private def nAggs(df: DataFrame): Int =
     df.queryExecution.optimizedPlan.collect { case a: Aggregate => a }.size
@@ -88,9 +88,9 @@ class DistinctElimSpec extends SparkSpec {
   private def nation() = spark.read.parquet(s"$dir/nation.parquet")
 
   private def declareEdges(): Unit = {
-    JoinElim.declare(spark, s"$dir/orders.parquet", "o_custkey",
+    JoinElim.declare(s"$dir/orders.parquet", "o_custkey",
       s"$dir/customer.parquet", "c_custkey")
-    JoinElim.declare(spark, s"$dir/customer.parquet", "c_nationkey",
+    JoinElim.declare(s"$dir/customer.parquet", "c_nationkey",
       s"$dir/nation.parquet", "n_nationkey")
   }
 
@@ -180,8 +180,8 @@ class DistinctElimSpec extends SparkSpec {
       .write.parquet(s"$d/dim")
     (1L to 20L).map(i => (i, i % 10 + 1)).toDF("fid", "fk")
       .write.parquet(s"$d/fact")
-    DistinctElim.declare(spark, s"$d/fact", "fid")
-    JoinElim.declare(spark, s"$d/fact", "fk", s"$d/dim", "dk")
+    DistinctElim.declare(s"$d/fact", "fid")
+    JoinElim.declare(s"$d/fact", "fk", s"$d/dim", "dk")
     try {
       val fact = spark.read.parquet(s"$d/fact")
       val dim = spark.read.parquet(s"$d/dim")

@@ -48,16 +48,19 @@ class DotProductSpec extends SparkSpec {
     assert(short.select(DotProduct(col("x"), col("y"))).head.getDouble(0) == 3.0)
   }
 
-  test("GraftExtensions injects graft_dot into a SparkSessionExtensions") {
-    // a fresh session can't be built here (the shared test session owns
-    // the JVM's SparkContext and getOrCreate ignores extensions then);
-    // SQL execution of the function is covered by the register() test
-    val ext = new org.apache.spark.sql.SparkSessionExtensions
-    new GraftExtensions()(ext) // must inject without throwing
+  test("every function GraftExtensions injects resolves on the session") {
+    val injected = collection.mutable.ArrayBuffer.empty[String]
+    new GraftExtensions()(new org.apache.spark.sql.SparkSessionExtensions {
+      override def injectFunction(f: FunctionDescription): Unit =
+        injected += f._1.funcName
+    })
+    assert(injected.contains("graft_dot") &&
+      injected.contains("graft_bloom_agg"), injected)
+    val missing = injected.filterNot(spark.catalog.functionExists)
+    assert(missing.isEmpty, s"not resolvable on the session: $missing")
   }
 
   test("registers as a SQL function") {
-    DotProduct.register(spark)
     val got = spark.sql(
       """SELECT graft_dot(array(CAST(1 AS FLOAT), CAST(2 AS FLOAT)),
         |                 array(CAST(3 AS FLOAT), CAST(4 AS FLOAT))) AS d""".stripMargin)

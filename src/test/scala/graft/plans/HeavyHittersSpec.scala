@@ -66,10 +66,6 @@ class HeavyHittersSpec extends SparkSpec {
 
   test("SQL registration: graft_heavy_hitters runs from query text") {
     stream.toDF("tok").createOrReplaceTempView("hh_toks")
-    org.apache.spark.sql.graft.bridge.registerFunction(spark,
-      "graft_heavy_hitters",
-      args => HeavyHitters(args.head,
-        args(1).eval().asInstanceOf[Int]).toAggregateExpression())
     val row = spark.sql(
       "SELECT graft_heavy_hitters(tok, 20) AS sk FROM hh_toks")
       .select(col("sk.total")).head()

@@ -19,7 +19,7 @@ class JoinElimSpec extends SparkSpec {
   private def pt() = spark.read.parquet(s"$dir/part.parquet")
 
   private def declare(): Unit =
-    JoinElim.declare(spark, s"$dir/lineitem.parquet", "l_partkey",
+    JoinElim.declare(s"$dir/lineitem.parquet", "l_partkey",
       s"$dir/part.parquet", "p_partkey")
 
   private def scans(df: org.apache.spark.sql.DataFrame): Set[String] =
@@ -104,7 +104,7 @@ class JoinElimSpec extends SparkSpec {
     JoinElim.clear()
     val plain = shapes.map(q => q().collect().map(_.toSeq).toSeq.sorted(
       Ordering.by((r: Seq[Any]) => r.mkString("|"))))
-    JoinElim.declare(spark, s"$tmp/fact.parquet", "fk",
+    JoinElim.declare(s"$tmp/fact.parquet", "fk",
       s"$tmp/dim.parquet", "pk")
     shapes.zip(plain).zipWithIndex.foreach { case ((q, want), i) =>
       val df = q()

@@ -62,7 +62,6 @@ class RepetitionStatsSpec extends SparkSpec {
   }
 
   test("SQL registration via graft_repstats") {
-    RepetitionStats.register(spark)
     val one = spark.sql(
       "SELECT graft_repstats('a a a a', 3) AS r").select("r.*").head()
     assert((one.getLong(0), one.getLong(1), one.getLong(2), one.getLong(3))

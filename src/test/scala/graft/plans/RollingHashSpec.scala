@@ -58,7 +58,6 @@ class RollingHashSpec extends SparkSpec {
   }
 
   test("SQL registration via graft_rollhash") {
-    RollingHash.register(spark)
     val r = spark.sql("SELECT graft_rollhash('abcdefgh').h AS h").head()
     // fold: seed 'a', then *31 + c for the remaining 7 chars, mod 1e9+7
     val expect = "abcdefgh".map(_.toLong)

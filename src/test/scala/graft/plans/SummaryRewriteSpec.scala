@@ -40,8 +40,7 @@ class SummaryRewriteSpec extends SparkSpec {
         min(col("l_extendedprice")).as("min_price"),
         max(col("l_extendedprice")).as("max_price"))
       .write.mode("overwrite").parquet(sumPath)
-    SummaryRewrite.register(spark, factPath,
-      spark.read.parquet(sumPath),
+    SummaryRewrite.register(factPath, spark.read.parquet(sumPath),
       keys = Seq("l_returnflag", "l_linestatus"),
       partials = Map(
         ("sum", "l_quantity") -> "sum_qty",
