@@ -4,11 +4,26 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.plans.GraftExtensions
 
-/** Shared session construction + full-plan execution for the harness
-  * mains (Verify / Bench / Probe) — one place for local-mode config, and
-  * the one place graft's rules and functions enter a session
-  * ([[GraftExtensions]]). */
+/** Shared session construction + full-plan execution. `local` builds the
+  * session of every graft main (Verify, Bench, Probe, Plans, PlanDump)
+  * and of the perfbench harness; the test fixture `SparkSpec.session`
+  * builds its own but takes [[CodegenCacheEntries]] from here. It is one
+  * place for local-mode config, and the one place graft's rules and
+  * functions enter a session ([[GraftExtensions]]). */
 object Sessions {
+  /** Entries of Spark's generated-code cache (`spark.sql.codegen.cache
+    * .maxEntries`, default 100). One cold pass over all 259 queries
+    * compiles 3,759 distinct classes (c4, sf0.1); at 100 entries most
+    * are evicted before their next use, so re-running a query compiled
+    * and JIT-warmed its code again (a perfbench `relational` pass
+    * recompiled 210–260 classes). 8192 holds that working set about
+    * twice over. The cache holds only what was compiled, so a small
+    * workload pays only for its own classes; the full sweep ends with
+    * about 110 MB more heap and 32 MB more Metaspace than at 100
+    * entries. Spark's cache is JVM-wide and sized by the first session
+    * to generate code. */
+  val CodegenCacheEntries = 8192
+
   def local(cpus: String): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -22,6 +37,7 @@ object Sessions {
       .config("spark.sql.files.maxPartitionBytes", s"${8 * 1024 * 1024}")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toLong)
       .withExtensions(new GraftExtensions)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -642,7 +642,11 @@ final class StreamEnv(val spark: SparkSession) {
     * DataSource v2 `readStream` formats instead, which parallelize
     * across executors. Returns the unbounded stream; stop the loop via
     * the function's own `cancel()`, exactly the reference's shutdown
-    * path (StreamSource.java cancel()). */
+    * path (StreamSource.java cancel()). An exception from `run` fails
+    * every job of this env, as in the reference: the query itself would
+    * idle on its MemoryStream (Structured Streaming has no external
+    * poison-pill for a source), so [[JobClient]] reads the failure from
+    * here and stops the job's queries. */
   def addSource[T: Encoder](fn: SourceFunction[T]): GStream[T] = {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[T]
@@ -651,17 +655,17 @@ final class StreamEnv(val spark: SparkSession) {
     }
     val th = new Thread(() => fn.run(ctx), s"graft-source-${fn.getClass.getSimpleName}")
     th.setDaemon(true)
-    // a crashing source must be LOUD: the query itself keeps running on
-    // an idle MemoryStream, so without this the only symptom of a
-    // run() exception would be silence (the reference fails the job;
-    // Structured Streaming has no external poison-pill for a source)
     th.setUncaughtExceptionHandler((t, e) => {
+      sourceFailure.compareAndSet(null, e)
       System.err.println(s"[graft] SourceFunction thread ${t.getName} died: $e")
-      e.printStackTrace()
     })
     th.start()
     new GStream(mem.toDS())
   }
+
+  /** The first exception thrown by an [[addSource]] run loop. */
+  private val sourceFailure =
+    new java.util.concurrent.atomic.AtomicReference[Throwable]()
 
   /** Executor-parallel unbounded source ≙ env.addSource(
     * ParallelSourceFunction) with setParallelism(n) (SURVEY §2.1's
@@ -694,7 +698,7 @@ final class StreamEnv(val spark: SparkSession) {
     * does over its one JobGraph. */
   def executeAsync(jobName: String = "graft-job"): JobClient =
     new JobClient(jobName, spark.streams.active.toSeq,
-      System.currentTimeMillis())
+      System.currentTimeMillis(), () => Option(sourceFailure.get))
 
   /** ≙ env.execute(jobName) → JobExecutionResult (StreamExecution
     * Environment.java:201-214): BLOCK until every query of the job
@@ -714,11 +718,11 @@ final case class JobResult(jobId: java.util.UUID, jobName: String,
 /** ≙ JobClient (flink-core/execution/JobClient.java:40-75): job-level
   * status/cancel/await over the queries the job comprises. Status is the
   * reference's JobStatus surface collapsed to the three states Spark
-  * exposes: RUNNING (any query active), FAILED (any query terminated
-  * with an exception), FINISHED. */
+  * exposes: RUNNING (any query active), FAILED (a source of the env
+  * threw, or any query terminated with an exception), FINISHED. */
 final class JobClient private[streaming] (val jobName: String,
     queries: Seq[org.apache.spark.sql.streaming.StreamingQuery],
-    startedAtMs: Long) {
+    startedAtMs: Long, sourceFailure: () => Option[Throwable]) {
 
   /** ≙ JobClient.getJobID. */
   val jobId: java.util.UUID = java.util.UUID.randomUUID()
@@ -728,7 +732,8 @@ final class JobClient private[streaming] (val jobName: String,
     * immediately (the documented "any query terminated with an
     * exception"), not RUNNING until the healthy query also stops. */
   def getJobStatus: String =
-    if (queries.exists(_.exception.isDefined)) "FAILED"
+    if (sourceFailure().isDefined || queries.exists(_.exception.isDefined))
+      "FAILED"
     else if (queries.exists(_.isActive)) "RUNNING"
     else "FINISHED"
 
@@ -737,12 +742,25 @@ final class JobClient private[streaming] (val jobName: String,
 
   /** ≙ JobClient.getJobExecutionResult: block until the job terminates
     * (rethrows the first query failure, like the reference's
-    * ExecutionException path), then report identity + runtime. */
+    * ExecutionException path), then report identity + runtime. A failed
+    * source stops the job's queries and is rethrown as the cause of a
+    * [[JobExecutionException]]. */
   def getJobExecutionResult: JobResult = {
-    queries.foreach(_.awaitTermination())
+    queries.foreach { q =>
+      while (!q.awaitTermination(100) && sourceFailure().isEmpty) ()
+    }
+    sourceFailure().foreach { e =>
+      cancel()
+      throw new JobExecutionException(s"job $jobName failed: a source threw", e)
+    }
     JobResult(jobId, jobName, System.currentTimeMillis() - startedAtMs)
   }
 }
+
+/** ≙ JobExecutionException (flink-runtime): a job failed; the cause is
+  * the failure that ended it. */
+final class JobExecutionException(msg: String, cause: Throwable)
+  extends RuntimeException(msg, cause)
 
 object StreamEnv {
   def apply(spark: SparkSession): StreamEnv = new StreamEnv(spark)

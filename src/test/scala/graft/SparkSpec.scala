@@ -35,6 +35,10 @@ object SparkSpec {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // static and JVM-wide: this session, the first of the forked test
+      // JVM, sizes the generated-code cache for every suite
+      .config("spark.sql.codegen.cache.maxEntries",
+        graft.Sessions.CodegenCacheEntries.toLong)
       // Spark 4.1's checksum checkpoint file manager deadlocks state-store
       // delta commits on local[n] (commit blocks forever awaiting the
       // checksum-write future); plain checkpoint files are fine for tests.

@@ -2,6 +2,10 @@ package graft.streaming
 
 import java.util.concurrent.atomic.AtomicBoolean
 
+import scala.concurrent.{Await, Future}
+import scala.concurrent.ExecutionContext.Implicits.global
+import scala.concurrent.duration._
+
 import org.apache.spark.sql.streaming.OutputMode
 
 import graft.SparkSpec
@@ -68,6 +72,32 @@ class SourceFunctionSpec extends SparkSpec {
       // and everything emitted before cancel still drains to the sink
       val rows = awaitTable("sfn_cancel")(_.length >= stoppedAt)
       assert(rows.map(_.getInt(0)).distinct.length == rows.length)
+    } finally q.stop()
+  }
+
+  test("a source that throws fails its job: FAILED status, execute throws") {
+    val env = StreamEnv(spark)
+    val boom = new IllegalStateException("source broke")
+    val src = new CountSource(3) {
+      override def run(ctx: SourceContext[Int]): Unit = {
+        super.run(ctx)
+        throw boom
+      }
+    }
+    val q = env.addSource(src).toDataset
+      .writeStream.format("memory").queryName("sfn_fail")
+      .outputMode(OutputMode.Append).start()
+    try {
+      // records emitted before the failure still reach the sink
+      awaitTable("sfn_fail")(_.length == 3)
+      val client = env.executeAsync("failing-source")
+      assert(client.getJobStatus == "FAILED")
+      // execute must end the job, not idle on the source's MemoryStream
+      val thrown = intercept[JobExecutionException] {
+        Await.result(Future(env.execute("failing-source")), 60.seconds)
+      }
+      assert(thrown.getCause eq boom)
+      assert(!q.isActive, "the failed job's query is still running")
     } finally q.stop()
   }
 }
